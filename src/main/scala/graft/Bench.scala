@@ -3,22 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
     // shuffle/spill on RAM-backed temp — see CacheKeeper.benchLocalDir
-    val spark = tools.CacheKeeper.benchLocalDir()
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-      // keep TypedImperativeAggregate GROUP BYs hash-aggregated (the
-      // 128-group default silently sorts whole inputs) — same setting
-      // as the other entry points
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpusFromEnv(4),
+      localDir = tools.CacheKeeper.benchLocalDir())
     // Keep the inputs page-cache-resident for the WHOLE run: the
     // container pairs an ~11 MB/s cold-read device with a proactive
     // reclaimer that evicts cold pages mid-run; a one-shot warm-up is

@@ -62,16 +62,12 @@ object Bench43 {
     // top-n rows instead of decoding whole files
     spark.sparkContext.hadoopConfiguration
       .setInt("parquet.page.row.count.limit", 8192)
-    // Dictionary-page budget knob, kept for re-measurement. MEASURED
-    // A LOSS at 10M (r14): raising the 1MB dict-page default to 64MB
-    // so SearchPhrase/Title/URL encode dictionary-style made the
-    // string-scan queries 1.3-1.4× SLOWER (q34 0.78→1.01 s, q13
-    // 0.37→0.54 s, min of 4) — Spark's vectorized reader decodes
-    // PLAIN string pages faster than it chases per-value dictionary
-    // indirection. Do not flip without re-measuring.
-    sys.env.get("HITS_DICT_PAGE_MB").foreach(mb =>
-      spark.sparkContext.hadoopConfiguration
-        .setInt("parquet.dictionary.page.size", mb.toInt << 20))
+    // The 1 MB dictionary-page default stays: raising it to 64 MB so
+    // SearchPhrase/Title/URL encode dictionary-style made the
+    // string-scan queries 1.3-1.4x SLOWER at 10M (q34 0.78 -> 1.01 s,
+    // q13 0.37 -> 0.54 s, min of 4) — Spark's vectorized reader
+    // decodes PLAIN string pages faster than it chases per-value
+    // dictionary indirection.
     // INT96 (Spark's default timestamp encoding) carries NO statistics:
     // no row-group pruning, no page column index — every pushed
     // EventTime predicate is a reader no-op. MICROS restores both
@@ -234,64 +230,21 @@ object Bench43 {
     * q24 at 24.4 s vs 9.9 s isolated). The measuring run records the
     * full cold+warm+warm triple per query and scores min-of-warm. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rows = sys.env.getOrElse("HITS_ROWS", "10000000").toLong
     val path = sys.env.getOrElse("HITS_PATH", "target/hits10m.parquet")
     val outFile = sys.env.getOrElse("BENCH43_OUT", "bench_43.json")
-    val builder1 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-    // protocol A/B knobs (unset on driver runs): BENCH43_NO_TMPFS=1
-    // keeps shuffle on the default local dir; BENCH43_SHUFFLE_COMPRESS
-    // overrides spark.shuffle.compress; BENCH43_NO_TOUCH=1 pins pages
-    // without the re-touch daemon — for isolating which protocol piece
-    // moves a timing (r14 left q4/q5/q6/q16 unexplained)
-    val builder0 = sys.env.get("BENCH43_SHUFFLE_COMPRESS")
-      .fold(builder1)(v => builder1.config("spark.shuffle.compress", v))
-    // shuffle/spill on RAM-backed temp — see CacheKeeper.benchLocalDir
-    val builder =
-      if (sys.env.get("BENCH43_NO_TMPFS").contains("1")) builder0
-      else graft.tools.CacheKeeper.benchLocalDir()
-        .fold(builder0)(d => builder0.config("spark.local.dir", d))
-    val spark = builder
-      // single-node 10M-row scale: AQE's stage-materialization
-      // barriers and re-planning rounds cost 0.1-10s per query and
-      // buy nothing (no skew, 32 shuffle partitions already sized);
-      // measured: q29 10.9s->0.98s, q33 1.41->0.99, q01 0.55->0.25.
-      // Bench-session tuning only — the library default stays AQE-on
-      // for the multi-executor 100TB path.
-      .config("spark.sql.adaptive.enabled", "false")
-      // sketch aggregates (uniq/quantile*) plan as ObjectHashAggregate,
-      // whose default sort-based fallback kicks in at 128 in-memory
-      // groups — GROUP BY RegionID (1000 groups) would silently sort
-      // the whole table. Sized so per-task agg state stays comfortably
-      // in memory (1M groups x ~KB sketch). Same setting as
-      // RunScript/CorpusTriage — the library's normal entry points.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      // NOTE: raising spark.sql.codegen.aggregate.fastHashMap
-      // .capacityBit to 2^20 was measured both ways at 100M: long-key
-      // GROUP BYs gain ~20% (q16 4.2->3.3) but string-key GROUP BYs
-      // lose the same (q34 6.1->7.9) — geomean-neutral, so the
-      // default stays.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // A/B hooks for plan experiments (unset on driver runs)
-    sys.props.get("graft.zerouniq").foreach(v =>
-      graft.operators.SketchAgg.zeroUniqEnabled = v.toBoolean)
-    sys.props.get("graft.bypass").foreach(v =>
-      graft.operators.SketchAgg.bypassEnabled = v.toBoolean)
-    sys.props.get("graft.pack").foreach(v =>
-      graft.operators.SketchAgg.packEnabled = v.toBoolean)
-    sys.props.get("graft.packfixed").foreach(v =>
-      graft.operators.SketchAgg.packFixedEnabled = v.toBoolean)
-    // force the final-stage sort fallback (OOM-safety path) to measure
-    // its cost at scale — r14 pinned correctness only
-    sys.props.get("graft.finalmaxgroups").foreach(v =>
-      graft.operators.SketchAgg.FinalMaxGroups = v.toInt)
+    // shuffle/spill on RAM-backed temp — see CacheKeeper.benchLocalDir.
+    // AQE off: at single-node 10M-row scale its stage-materialization
+    // barriers and re-planning rounds cost 0.1-10 s per query and buy
+    // nothing (no skew, shuffle partitions already sized); measured
+    // q29 10.9 s -> 0.98, q33 1.41 -> 0.99, q01 0.55 -> 0.25. The
+    // library default stays AQE-on for the multi-executor path.
+    // Raising spark.sql.codegen.aggregate.fastHashMap.capacityBit to
+    // 2^20 was measured both ways at 100M: long-key GROUP BYs gain
+    // ~20% (q16 4.2 -> 3.3 s), string-key GROUP BYs lose the same (q34
+    // 6.1 -> 7.9) — geomean-neutral, so the default stays.
+    val spark = GraftSession(GraftSession.cpusFromEnv(32), aqe = false,
+      localDir = graft.tools.CacheKeeper.benchLocalDir())
     val genOnly = args.contains("generate")
     if (!new java.io.File(path).exists()) {
       System.err.println(s"[bench43] generating $rows rows at $path ...")
@@ -309,11 +262,9 @@ object Bench43 {
     // rationale.
     locally {
       val t0 = System.nanoTime()
-      val touchMs =
-        if (sys.env.get("BENCH43_NO_TOUCH").contains("1")) 0L else 4000L
-      val bytes = graft.tools.CacheKeeper.pin(Seq(path), touchMs)
+      val bytes = graft.tools.CacheKeeper.pin(Seq(path))
       System.err.println(f"[bench43] pinned ${bytes / 1e9}%.1f GB in " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s (touch=${touchMs > 0})")
+        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     spark.read.parquet(path).createOrReplaceTempView("hits")
     // Iteration/profiling aids (no effect on driver runs, which leave
@@ -391,8 +342,7 @@ object Bench43 {
     // for the slow aggregation queries. Re-measure the heavy set in
     // ROUND-ROBIN order — each round runs the whole set back-to-back,
     // so every query's samples cover the same host windows and their
-    // medians are mutually comparable (the interleaved-pairs idea of
-    // tools/AbBench promoted into the scored artifact). Off with
+    // medians are mutually comparable. Off with
     // BENCH43_HEAVY_ROUNDS=0; subset runs skip absent queries.
     // r17 (r16 verdict ask #5): the default set covers every query the
     // r16 artifact measured >2× with a ≥0.1 s baseline (uniq-top-10

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: scale the sf0.1 test tables ~Nx by unioning key-offset
@@ -19,14 +18,7 @@ object ScaleGen {
     val copies = args.lift(0).map(_.toInt).getOrElse(10)
     val out = args.lift(1).getOrElse("target/sf1")
     val src = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpusFromEnv(32))
 
     val offsetCols: Map[String, Seq[String]] = Map(
       "region" -> Seq.empty,

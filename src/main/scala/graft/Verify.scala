@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,28 +7,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet // optional query-name filter (dev runs)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // SAME setting as Bench/Bench43/RunScript: the oracle must
-      // witness the exact plan the bench times. Without it, typed-agg
-      // GROUP BYs here took ObjectHashAggregate's 128-group sort-based
-      // fallback while the bench ran the hash plan — a correctness
-      // gate on a plan nobody benches.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Dev hook (unset on driver runs): shrink the bypass sample so the
-    // adaptive partial-agg bypass TRIGGERS at oracle scale — sf0.01
-    // partitions are smaller than the 64k production sample, so the
-    // streamed path would otherwise never face the DuckDB gate.
-    sys.props.get("graft.bypasssample").foreach(v =>
-      graft.operators.SketchAgg.BypassSampleRows = v.toInt)
+    val spark = GraftSession(GraftSession.cpusFromEnv(4))
     new java.io.File(outDir).mkdirs()
     // fail FAST and by name on a null oracle string (a Scala
     // val-initialization-order bug puts null into a QueryDef whose

@@ -37,11 +37,6 @@ import org.apache.spark.sql.functions._
   * training-pipeline surface.
   */
 object ConnectedComponents {
-  /** A/B knob (dev only): revert to the r17 groupBy+self-join star
-    * implementations to measure the window-min restructure in one
-    * warm JVM. Same edge sets either way (OperatorSpec). */
-  @volatile private[graft] var useJoinStars: Boolean = false
-
   /** @param edges    undirected edge list (self-loops ignored)
     * @param srcCol   source node column (castable to long)
     * @param dstCol   destination node column (castable to long)
@@ -148,19 +143,13 @@ object ConnectedComponents {
     * two exchanges of the undirected edge list plus a sort-merge
     * join per round (guide §2.4: two operations keyed the same way
     * share one exchange). Values are identical: the window min over
-    * partition u is exactly the former per-u aggregate. A supernode's
+    * partition u is exactly the former per-u aggregate, and the
+    * window spelling won 5/5 paired runs against it. A supernode's
     * partition buffers through ExternalAppendOnlyUnsafeRowArray
     * (spills to disk) — same bytes the former join sorted, no
     * collected adjacency list. */
   private def largeStar(e: DataFrame): DataFrame = {
     val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    if (useJoinStars) {
-      val mins = und.groupBy(col("u"))
-        .agg(least(min(col("v")), col("u")).as("m"))
-      return und.join(mins, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-    }
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     und.withColumn("m", least(min(col("v")).over(w), col("u")))
       .where(col("v") > col("u"))
@@ -179,15 +168,6 @@ object ConnectedComponents {
     // codegen projection, kept for call-order safety
     val or = e.select(greatest(col("u"), col("v")).as("u"),
       least(col("u"), col("v")).as("v"))
-    if (useJoinStars) {
-      val ord = or.distinct()
-      val mins = ord.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val relinked = ord.join(mins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-      return relinked.union(mins.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v"))
-        .distinct()
-    }
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     val withM = or.withColumn("m", min(col("v")).over(w))
     withM.select(col("v").as("u"), col("m").as("v"))

@@ -67,18 +67,6 @@ object SketchAgg {
   /** Kill switch, also used by specs to obtain the generic-plan
     * baseline for bit-identical comparison. */
   @volatile private[graft] var enabled: Boolean = true
-  /** Opt-in switch for the zero-object-state shape (plain
-    * count/sum/avg GROUP BYs over a 64-bit key). Default OFF: measured
-    * head-to-head at 100M rows (bench43, cache-pinned, tmpfs shuffle,
-    * min of 4 runs), whole-stage-codegen HashAggregate beats this
-    * operator on the full-scan shapes (q16 4.9 s vs 7.0, q36 5.7 vs
-    * 9.4) and loses only on the filtered ~10M-row variants (q32 3.1
-    * vs 1.9) — the interpreted per-row key readers cost more than the
-    * UnsafeRow map they avoid once codegen's vectorized input path is
-    * in play. The path stays implemented, bit-identity-pinned
-    * (SketchAggSpec), and switchable for future re-measurement on a
-    * quieter host or after a codegen'd reader. */
-  @volatile private[graft] var zeroUniqEnabled: Boolean = false
 
   /** Adaptive partial-agg bypass — ClickHouse's answer to high-NDV
     * GROUP BY keys (two-level table conversion + WithMergeableState
@@ -94,12 +82,16 @@ object SketchAgg {
     * readers, no map). Low-NDV and skewed shapes never trigger (their
     * sample hit rate is high), so map-side combine is preserved
     * exactly where it pays. Decision is per task — a skewed partition
-    * keeps its map while a high-NDV one streams. */
-  @volatile private[graft] var bypassEnabled: Boolean = true
-  /** Rows each partial task aggregates before deciding. */
+    * keeps its map while a high-NDV one streams. Keyless aggregates
+    * have one group per task and never bypass. At 100M rows the
+    * bypass beat the always-hash partial on q16 (min 3.54 vs 4.53 s),
+    * q17 (6.75 vs 7.65) and q36 (5.15 vs 6.73), neutral on q33.
+    *
+    * Rows each partial task aggregates before deciding. Mutable for
+    * tests only (forces the streamed path at small scale). */
   @volatile private[graft] var BypassSampleRows: Int = 1 << 16
   /** groups/sampledRows at or above this ⇒ stream instead of hash. */
-  @volatile private[graft] var BypassRatio: Double = 0.7
+  val BypassRatio: Double = 0.7
   /** A bypassing task re-samples after streaming this many rows: a
     * partition whose first window is high-NDV but whose TAIL is
     * repetitive (clustered-prefix shape — e.g. data sorted so new keys
@@ -107,28 +99,20 @@ object SketchAgg {
     * re-check costs one 64k-row map window per [[BypassRecheckRows]]
     * streamed (<1% overhead) and mirrors the reference's per-block
     * conversion decision, which keeps re-evaluating as blocks arrive
-    * (Interpreters/Aggregator.h:736-744). */
+    * (Interpreters/Aggregator.h:736-744). Mutable for tests only. */
   @volatile private[graft] var BypassRecheckRows: Long = 8L << 20
 
   /** Max group-key arity admitted (see the note in [[eligible]]). */
-  @volatile private[graft] var MaxKeys: Int = 2
-  /** Admit zero-object shapes whose only high-NDV key is a STRING
-    * (see the note in [[eligible]]). ON since r17: the r16 A/B was
-    * weather-inconclusive; re-run in a probe-quiet window at 100M
-    * (AbBench `stringkeys`, 5 interleaved pairs per query), ON won
-    * q34 5/5 pairs (min 3.56 vs 5.17 s), q35 4/5 (min 3.24 vs 5.47),
-    * q13 4/5 (min 0.98 vs 1.11) — the GROUP-BY-URL class moves from
-    * ~2.2–2.4× of the reference baseline to ~1.0–1.1×. */
-  @volatile private[graft] var StringKeysEnabled: Boolean = true
+  val MaxKeys: Int = 2
 
   /** Packed exchange — ship BLOCKS, not rows (the reference's
     * Block-granular pipeline: partial states travel as columns of a
     * block, DataStreams/IBlockInputStream.h, not as per-row messages).
-    * Profiling at 100M rows (r16, tools/ProfileAgg) attributed ~65% of
-    * the heavy-class task time to per-RECORD exchange overhead: 100M
-    * one-row partials cost ~410 ns each to shuffle-write and a similar
-    * fetch+deserialize on the final side, while the actual merge
-    * compute was ~5 s of 107 s. With packing, each partial task
+    * Profiling at 100M rows attributed ~65% of the heavy-class task
+    * time to per-RECORD exchange overhead: 100M one-row partials cost
+    * ~410 ns each to shuffle-write and a similar fetch+deserialize on
+    * the final side, while the actual merge compute was ~5 s of
+    * 107 s. With packing, each partial task
     * appends its output rows (map-emitted AND bypass-streamed) into
     * per-bucket byte buffers — bucket = hash(key) % [[PackBuckets]] —
     * and emits ONE (bucket, blob) row per [[PackFlushBytes]] window,
@@ -136,25 +120,15 @@ object SketchAgg {
     * sub-rows (same payload schema, same ordinals) and merges exactly
     * as before; bucket count ≫ shuffle partitions keeps reduce skew
     * at balls-in-bins ±few-% without per-task buffers exceeding
-    * PackBuckets × PackFlushBytes. */
-  @volatile private[graft] var packEnabled: Boolean = true
-  /** Bucket fan-out (fixed, independent of shuffle partitions — the
-    * exchange hashes the bucket id again, so many small buckets spread
-    * evenly over any partition count, including AQE coalescing). */
-  @volatile private[graft] var PackBuckets: Int = 1024
+    * PackBuckets × PackFlushBytes.
+    *
+    * The bucket fan-out is fixed, independent of shuffle partitions:
+    * the exchange hashes the bucket id again, so many small buckets
+    * spread evenly over any partition count, including AQE
+    * coalescing. */
+  val PackBuckets: Int = 1024
   /** Per-bucket blob flush threshold (bytes). */
-  @volatile private[graft] var PackFlushBytes: Int = 64 << 10
-  /** Fixed-width blob records (r17 punch list #2): when every payload
-    * field is a fixed-width type, each sub-row serializes to the same
-    * UnsafeRow byte count, so the per-row 4-byte length prefix is
-    * redundant — and when no payload field is nullable, the null
-    * bitmap word is a constant zero and is omitted too. The heavy
-    * count-only shapes (bench43 q16/q36: one long key + count) drop
-    * from 28 to 16 blob bytes/row, cutting exchange write bytes and
-    * unpack work at the information floor the r17 profile attributed
-    * the residual to. Bit-identical sub-rows on the final side
-    * (SketchAggSpec pins pack×fixed layout invariance). */
-  @volatile private[graft] var packFixedEnabled: Boolean = true
+  val PackFlushBytes: Int = 64 << 10
 
   /** count(*) spelled as count(non-null literal) — count(NULL) is NOT
     * a row count (it is 0) and must fall through to the null-checked
@@ -208,14 +182,15 @@ object SketchAgg {
   private[operators] def eligible(
       grouping: Seq[NamedExpression],
       aggs: Seq[AggregateExpression]): Boolean = {
-    // ≤MaxKeys (default 2). GroupKeyMap is arity-generic; raising to 3
-    // for the bench q19 shape (UserID, minute, SearchPhrase) was
-    // MEASURED A LOSS at 100M in r15 (SketchAgg 13.6–140 s vs
-    // codegen's stable 9–13 s) — root cause was the FINAL map cloning
-    // a UTF8String per group (~90M groups, allocation/GC storm). r16
-    // replaced the clones with a byte arena and the exchange with
-    // packed blobs, so the admission is re-measurable via the mutable
-    // knob; it stays at 2 unless an interleaved A/B shows a win.
+    // ≤MaxKeys. GroupKeyMap is arity-generic; raising to 3 for the
+    // bench q19 shape (UserID, minute, SearchPhrase) was MEASURED A
+    // LOSS at 100M (SketchAgg 13.6–140 s vs codegen's stable 9–13 s) —
+    // root cause was the FINAL map cloning a UTF8String per group
+    // (~90M groups, allocation/GC storm). Re-measured at 100M after
+    // the byte arena removed the clones, it still lost: SketchAgg med
+    // 29.7 s vs codegen 13.4 s, codegen won 5/5 interleaved pairs —
+    // at ~90M 3-part groups codegen's UnsafeRow page map + spill is
+    // the better final stage and far more stable.
     val keysOk = grouping.length <= MaxKeys && grouping.forall { k =>
       supportedKeyType(k.dataType) && cleanExpr(k)
     }
@@ -238,22 +213,20 @@ object SketchAgg {
           case _ => false
         })
     val shapeOk = keysOk && aggs.nonEmpty && aggs.forall(fnOk)
-    def hasLongKey = grouping.exists(_.dataType == LongType)
-    // StringKeysEnabled extends the zero-object admission to plain
-    // string keys (GROUP BY URL-class shapes) — re-measurable now the
-    // arena map makes string groups allocation-free; A/B via AbBench
-    // knob "stringkeys".
-    def hasStringKey = grouping.exists(_.dataType == StringType)
     // Zero-object shapes are admitted when the adaptive bypass can
     // protect them: a 64-bit key at high NDV is exactly where codegen
-    // HashAggregate's partial map is futile (r14 measured the typed
-    // MAP losing to codegen on these full scans — the bypass replaces
-    // the map with a streamed projection, changing the economics).
-    // count/sum/avg all have singleton forms, so the bypass is always
-    // available for this shape.
+    // HashAggregate's partial map is futile (the typed MAP alone lost
+    // to codegen on these full scans at 100M — q16 7.0 vs 4.9 s, q36
+    // 9.4 vs 5.7 — the bypass replaces the map with a streamed
+    // projection, changing the economics). count/sum/avg all have
+    // singleton forms, so the bypass is always available for this
+    // shape. Plain STRING keys (GROUP BY URL-class shapes) ride too:
+    // the arena map makes string groups allocation-free, and at 100M
+    // this path won q34 5/5 interleaved pairs (min 3.56 vs 5.17 s),
+    // q35 4/5 (3.24 vs 5.47) and q13 4/5 (0.98 vs 1.11).
+    def hasKeyOf(t: DataType) = grouping.exists(_.dataType == t)
     shapeOk && (aggs.exists(e => objectState(e.aggregateFunction)) ||
-      ((zeroUniqEnabled || bypassEnabled) && grouping.nonEmpty &&
-        (hasLongKey || (StringKeysEnabled && hasStringKey))))
+      hasKeyOf(LongType) || hasKeyOf(StringType))
   }
 }
 
@@ -262,13 +235,9 @@ object SketchAggStrategy extends SparkStrategy {
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalAggregation(grouping, aggExprs, results, child)
         if SketchAgg.enabled && SketchAgg.eligible(grouping, aggExprs) =>
-      // keyless (global) aggregation has one row per task — nothing to
-      // pack; keyed shapes ship blocks (see SketchAgg.packEnabled)
-      val packed = SketchAgg.packEnabled && grouping.nonEmpty
-      val partial =
-        PartialSketchAggExec(grouping, aggExprs, planLater(child), packed)
+      val partial = PartialSketchAggExec(grouping, aggExprs, planLater(child))
       FinalSketchAggExec(grouping, SketchAgg.AggList(aggExprs), results,
-        partial, packed) :: Nil
+        partial) :: Nil
     case _ => Nil
   }
 }
@@ -480,7 +449,7 @@ private[operators] object AggState {
 }
 
 /** One-row aggregate states in their wire form — StaticInvoke targets
-  * for the bypass projection (see [[SketchAgg.bypassEnabled]]). Each
+  * for the bypass projection (see [[SketchAgg.BypassSampleRows]]). Each
   * method produces exactly the bytes [[AggState.UniqState]] would emit
   * for a group that saw one row with the given value: UniquesHashSet
   * layout [skipDegree=0][varint count][32-bit hashes LE], hash =
@@ -715,6 +684,10 @@ private[operators] trait SketchAggExecBase extends UnaryExecNode {
   def keys: Seq[NamedExpression]
   def aggs: Seq[AggregateExpression]
 
+  /** Keyed shapes ship blocks (see [[SketchAgg.PackBuckets]]); keyless
+    * (global) aggregation has one row per task — nothing to pack. */
+  protected def packed: Boolean = keys.nonEmpty
+
   protected def keyIsString: Array[Boolean] =
     keys.map(_.dataType == StringType).toArray
   protected def keyNullable: Array[Boolean] = keys.map(_.nullable).toArray
@@ -744,9 +717,11 @@ private[operators] trait SketchAggExecBase extends UnaryExecNode {
     *  - (S, 0) nothing nullable — additionally the leading B' null
     *    bitmap bytes (always zero) are omitted: records are S bytes of
     *    VALUE words only, rebuilt into a zeroed scratch row on unpack.
-    * Gated by [[SketchAgg.packFixedEnabled]]. */
+    * The heavy count-only shapes (bench43 q16/q36: one long key +
+    * count) drop from 28 to 16 blob bytes/row against the
+    * length-prefixed form, cutting exchange write bytes and unpack
+    * work. */
   protected def packRecordSpec: (Int, Int) = {
-    if (!SketchAgg.packFixedEnabled) return (0, 0)
     val fields: Seq[(DataType, Boolean)] =
       keys.map(k => (k.dataType, k.nullable)) ++
         bufferFields.map(f => (f.dataType, f.nullable))
@@ -850,8 +825,7 @@ private[operators] trait SketchAggExecBase extends UnaryExecNode {
 case class PartialSketchAggExec(
     keys: Seq[NamedExpression],
     aggs: Seq[AggregateExpression],
-    child: SparkPlan,
-    packed: Boolean = false) extends SketchAggExecBase {
+    child: SparkPlan) extends SketchAggExecBase {
 
   // Memoized, NOT a plain lazy val: the attributes fabricate fresh
   // ExprIds and must stay IDENTICAL across tree copies — the packed
@@ -963,7 +937,7 @@ case class PartialSketchAggExec(
     val outSchema = StructType(payloadOutput.map(a =>
       StructField(a.name, a.dataType, a.nullable)))
     val flushAt = SketchAgg.PartialFlushGroups
-    // packed-exchange plumbing (see SketchAgg.packEnabled): bucket =
+    // packed-exchange plumbing (see SketchAgg.PackBuckets): bucket =
     // murmur3(key parts) mod PackBuckets, computed by a codegen'd
     // projection over the payload row (same hash for map-emitted and
     // bypass-streamed rows — equal keys always share a bucket)
@@ -1032,14 +1006,15 @@ case class PartialSketchAggExec(
           projAttrs: Seq[Attribute])
       }
 
-    // Adaptive-bypass plumbing (see SketchAgg.bypassEnabled): knobs
-    // snapshotted at execute, singleton exprs built driver-side, the
-    // codegen'd projection compiled per task (codegen cache dedups).
+    // Adaptive-bypass plumbing (see SketchAgg.BypassSampleRows):
+    // settings snapshotted at execute, singleton exprs built
+    // driver-side, the codegen'd projection compiled per task (codegen
+    // cache dedups).
     val bypassSample = SketchAgg.BypassSampleRows.toLong
     val bypassRatio = SketchAgg.BypassRatio
     val bypassRecheck = SketchAgg.BypassRecheckRows
     val bypassExprs: Option[Seq[Expression]] =
-      if (!SketchAgg.bypassEnabled || nk == 0) None
+      if (nk == 0) None
       else singletonExprs(effKeys, effAggs)
     val mBypassTasks = longMetric("bypassTasks")
     val mBypassRows = longMetric("bypassRows")
@@ -1268,7 +1243,7 @@ case class PartialSketchAggExec(
 }
 
 /** Packs payload UnsafeRows into per-bucket byte blobs
-  * ([[SketchAgg.packEnabled]]): emits one (bucket, blob) row whenever
+  * ([[SketchAgg.PackBuckets]]): emits one (bucket, blob) row whenever
   * a bucket crosses `flushBytes`, draining the remainder at input end.
   * Each input row's bytes are copied immediately, so the upstream
   * single-reused-row contract is preserved; emitted blob arrays are
@@ -1405,8 +1380,7 @@ case class FinalSketchAggExec(
     keys: Seq[NamedExpression],
     aggList: SketchAgg.AggList,
     resultExprs: Seq[NamedExpression],
-    child: SparkPlan,
-    packed: Boolean = false) extends SketchAggExecBase {
+    child: SparkPlan) extends SketchAggExecBase {
 
   def aggs: Seq[AggregateExpression] = aggList.aggs
 
@@ -1425,9 +1399,9 @@ case class FinalSketchAggExec(
     // exchange-read share of the loop: every 128th (hasNext, next)
     // pair is timed and extrapolated ×128 — partial rows are uniform
     // (one group per row), so the sample is unbiased at ~0.8%% timer
-    // overhead. mergeLoopNs - fetchNs ≈ merge COMPUTE; the profiling
-    // harness (tools/ProfileAgg) reads both to attribute the
-    // heavy-class residual (exchange serde vs typed-map merge).
+    // overhead. mergeLoopNs - fetchNs ≈ merge COMPUTE: together they
+    // attribute the heavy-class residual (exchange serde vs typed-map
+    // merge).
     "fetchNs" -> org.apache.spark.sql.execution.metric.SQLMetrics
       .createNanoTimingMetric(sparkContext, "exchange fetch+deser (sampled)"))
 
@@ -1436,20 +1410,16 @@ case class FinalSketchAggExec(
   // under the packed exchange the child carries only (bucket, blob),
   // so the key attributes are also produced HERE (from the unpacked
   // sub-rows), not passed through
-  override def producedAttributes: AttributeSet = {
-    val base = AttributeSet(aggs.map(_.resultAttribute)) ++ AttributeSet(output)
-    if (packed) base ++ AttributeSet(keys.map(_.toAttribute))
-    else base -- AttributeSet(keys.map(_.toAttribute))
-  }
+  override def producedAttributes: AttributeSet =
+    AttributeSet(aggs.map(_.resultAttribute)) ++ AttributeSet(output) ++
+      AttributeSet(keys.map(_.toAttribute))
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (keys.isEmpty) AllTuples :: Nil
-    else if (packed)
-      // cluster by the precomputed bucket id: equal keys share a
-      // bucket by construction, and PackBuckets ≫ partitions keeps
-      // the reduce side balanced under any partition count
-      ClusteredDistribution(Seq(child.output.head)) :: Nil
-    else ClusteredDistribution(keys.map(_.toAttribute)) :: Nil
+    // cluster by the precomputed bucket id: equal keys share a bucket
+    // by construction, and PackBuckets ≫ partitions keeps the reduce
+    // side balanced under any partition count
+    else ClusteredDistribution(Seq(child.output.head)) :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
     val keyTypes = keys.map(_.dataType).toArray

@@ -3,10 +3,6 @@ package graft.sql
 import java.io.File
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.sources.Formats
-
 /** Triage tool: run every reference stateless test through [[ChSql]]
   * and report which match their .reference goldens. Used to grow the
   * pinned set in ChSqlCorpusSpec; not part of the driver contract.
@@ -86,24 +82,8 @@ object CorpusTriage {
 
   def main(args: Array[String]): Unit = {
     val filter = args.headOption.getOrElse("")
-    // bounded, sweepable shuffle workspace (a full sweep once left
-    // 55 GB of orphaned blockmgr dirs in /tmp)
-    val localDir = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft-spark-local")
-    localDir.mkdirs()
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // keep TypedImperativeAggregate states hash-aggregated (the
-      // 128-group sort fallback scrambles per-group input order,
-      // which order-sensitive sampler goldens observe — corpus 00273)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.local.dir", localDir.getAbsolutePath)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(8,
+      localDir = Some(graft.GraftSession.sweptLocalDir()))
 
     // filter: substring match, or `@/path/to/file` with one test name
     // per line (used to sweep exactly the unpinned set)

@@ -1,40 +1,41 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Debug tool: execute CH-dialect statements from the command line
-  * (each arg is a full statement list) and print rendered output.
-  * Not part of the driver contract; see also [[CorpusTriage]].
+/** Dev tool: run CH-dialect statements through the ChSql/ChDdl
+  * pipeline. Each argument is a statement list, or `@file` to read
+  * one from a file (a corpus script, say). For each statement it
+  * prints a `==STMT==` marker with the statement, the `ChSql.translate`
+  * Spark SQL, then the rendered output or the error with its cause
+  * chain. See also [[CorpusTriage]].
   *
-  * Usage: runMain graft.sql.Repl "SELECT 1" ...
+  * Usage: runMain graft.sql.Repl "SELECT 1" @/path/to/script.sql ...
   */
 object Repl {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[2]"))
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    args.map { a =>
-      if (a.startsWith("@"))
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(a.drop(1))), "UTF-8")
-      else a
-    }.foreach { sql =>
-      System.err.println(s"--- ${sql.take(200)}")
+    val spark = graft.GraftSession(4)
+    args.foreach { a =>
+      val sql =
+        if (a.startsWith("@")) Files.readString(Paths.get(a.drop(1))) else a
       try ChSql.statements(sql).foreach { st =>
-        if (sys.env.contains("GRAFT_MARK"))
-          println(s"==STMT== ${st.linesIterator.mkString(" ").take(160)}")
-        ChDdl.executeRendered(spark, st).foreach(println)
-      } catch {
-        case e: Throwable =>
-          println(s"ERR ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-          if (sys.env.contains("GRAFT_REPL_STACK")) e.printStackTrace()
-      }
+        println(s"==STMT== ${st.linesIterator.mkString(" ")}")
+        try {
+          println(s"==SQL== ${ChSql.translate(st)}")
+          ChDdl.executeRendered(spark, st).foreach(println)
+        } catch { case e: Throwable => printError(e) }
+      } catch { case e: Throwable => printError(e) }
     }
     spark.stop()
+  }
+
+  private def printError(e: Throwable): Unit = {
+    def msg(t: Throwable, lines: Int) = s"${t.getClass.getSimpleName}: " +
+      Option(t.getMessage).getOrElse("").linesIterator.take(lines).mkString(" | ")
+    println(s"ERR ${msg(e, 4)}")
+    var c = e.getCause
+    while (c != null) {
+      println(s"  CAUSE ${msg(c, 2)}")
+      c = c.getCause
+    }
   }
 }

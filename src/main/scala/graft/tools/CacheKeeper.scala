@@ -46,9 +46,7 @@ object CacheKeeper {
   /** Map + fault in every file under `roots`; start the touch thread.
     * Returns total pinned bytes. Idempotent: a second call unpins the
     * previous set first. Failures (unmappable fs, OOM of address
-    * space) degrade to no-pin rather than failing the bench.
-    * `touchIntervalMs <= 0` maps + faults but starts NO touch thread
-    * (protocol A/B: isolates the daemon's CPU cost from the pin). */
+    * space) degrade to no-pin rather than failing the bench. */
   def pin(roots: Seq[String], touchIntervalMs: Long = 4000L): Long = synchronized {
     unpin()
     val files = collection.mutable.ArrayBuffer.empty[File]
@@ -78,7 +76,6 @@ object CacheKeeper {
     if (bufs.nonEmpty) {
       val st = new State(bufs.toArray)
       state = Some(st)
-      if (touchIntervalMs <= 0) return total // mapped + faulted, no daemon
       val t = new Thread(() => {
         while (st.running) {
           var sink = 0L

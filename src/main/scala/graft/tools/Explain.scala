@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: execute one CH-dialect query against a parquet-backed
   * `hits` view and dump the EXECUTED physical plan (plus the
   * LateMaterialization pass plans when that rewrite fired) — the
@@ -13,17 +11,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val path = args(0)
     val query = args(1)
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = if (args.length > 2) args(2).toInt else 32
+    val spark = graft.GraftSession(cpus, aqe = false)
     spark.read.parquet(path).createOrReplaceTempView("hits")
     val reps = sys.env.getOrElse("EXPLAIN_REPEAT", "1").toInt
     // EXPLAIN_RAW=1 bypasses the dialect (and its rewrites): plain

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for registry queries to
   * files — the plan evidence the optimization rounds commit under
   * plans/rNN/. Usage:
@@ -15,16 +13,7 @@ object PlanDump {
     val suffix = args(1)
     val which = args.lift(2).getOrElse("all")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(graft.GraftSession.cpusFromEnv(32))
     new java.io.File(outDir).mkdirs()
     val wanted: Option[Set[String]] =
       if (which == "all") None

@@ -12,38 +12,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  /** Shuffle/spill files go to a bounded workspace that old runs'
-    * leftovers can be swept from (a prior full-corpus sweep once
-    * filled /tmp with 55 GB of orphaned blockmgr dirs and failed
-    * unrelated tests with ENOSPC). Cleaned eagerly at session build. */
-  private val localDir = {
-    val d = new java.io.File(sys.props("java.io.tmpdir"), "graft-spark-local")
-    if (d.isDirectory) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      Option(d.listFiles()).foreach(_.foreach(rm))
-    }
-    d.mkdirs()
-    d.getAbsolutePath
-  }
-
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // keep TypedImperativeAggregate states hash-aggregated (the
-      // 128-group sort fallback scrambles per-group input order,
-      // which order-sensitive sampler goldens observe — corpus 00273)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Shuffle/spill go to the swept workspace: leftovers of old runs
+    * once filled /tmp and failed unrelated tests with ENOSPC. */
+  lazy val session: SparkSession =
+    GraftSession(4, localDir = Some(GraftSession.sweptLocalDir()))
 }
