@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *    TypedImperativeAggregate GROUP BYs (uniq/quantile*), and its
   *    sort scrambles per-group input order, which order-sensitive
   *    sampler goldens observe (corpus 00273);
+  *  - parquet TIMESTAMP(NANOS) read as Long (`nanosAsLong`), which
+  *    [[graft.core.Tables]] turns into µs timestamps: some `events`
+  *    fixture generations are written in nanos, and Spark rejects
+  *    those files without it;
   *  - UTC session time zone, UI off, WARN logging.
   *
   * Parameters cover only what callers really differ on: the core
@@ -46,6 +50,7 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "1000000")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     val withAqe = if (aqe) b else b.config("spark.sql.adaptive.enabled", "false")

@@ -17,9 +17,6 @@ import graft.core.Tables
   * the aggregate that consumes them.
   */
 object ArrayQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   private val words = "split(text, ' ')"
 
   // ---------------------------------------------------------------
@@ -27,7 +24,7 @@ object ArrayQueries {
   // frequencies (reference: ExpressionActions ARRAY_JOIN action).
   // ---------------------------------------------------------------
   def q58(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(explode(expr(words)).as("w"))
       .groupBy(col("w"))
       .agg(count(lit(1)).as("cnt"))
@@ -45,7 +42,7 @@ object ArrayQueries {
   // Long words (>8 chars) are rare, so many docs hit the empty case.
   // ---------------------------------------------------------------
   def q59(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"),
         explode_outer(expr(s"filter($words, w -> length(w) > 8)")).as("w"))
       .groupBy(col("w"))
@@ -66,7 +63,7 @@ object ArrayQueries {
   // position (FunctionsArray.h arrayEnumerate).
   // ---------------------------------------------------------------
   def q60(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "nation")
+    Tables(s, dir, "nation")
       .select(col("n_nationkey").cast("int").as("n_nationkey"),
         posexplode(split(col("n_name"), "")).as(Seq("pos0", "ch")))
       .select(col("n_nationkey"), (col("pos0") + 1).as("pos"), col("ch"))
@@ -85,7 +82,7 @@ object ArrayQueries {
   // DataTypeNested.cpp) ≡ arrays_zip + explode.
   // ---------------------------------------------------------------
   def q61(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), expr(words).as("ws"),
         expr(s"transform($words, w -> length(w))").as("ls"))
       .select(col("doc_id"), explode(arrays_zip(col("ws"), col("ls"))).as("z"))
@@ -116,7 +113,7 @@ object ArrayQueries {
   // CollapseProject does not re-inline a non-cheap expression
   // referenced more than once, so the two-step projection survives.
   def q62(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       .select(col("doc_id"), expr(words).as("ws"))
@@ -143,7 +140,7 @@ object ArrayQueries {
   // token array + its distinct projected once each (see q62): split
   // appeared five times and array_distinct twice in the one Project
   def q63(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       .select(col("doc_id"), expr(words).as("ws"))
@@ -187,7 +184,7 @@ object ArrayQueries {
   // event list is bounded by user activity, not table size.
   // ---------------------------------------------------------------
   def q65(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(expr(
         "array_join(transform(array_sort(collect_list(struct(ts, event_id, substring(event_type, 1, 1) AS c))), x -> x.c), '')")
@@ -215,7 +212,7 @@ object ArrayQueries {
   // total order and the SQL-pair oracle is exact.
   // ---------------------------------------------------------------
   def q94(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .withColumn("mts",
         expr("unix_timestamp(ts) * 1000000L + event_id"))
       .groupBy(col("user_id"))

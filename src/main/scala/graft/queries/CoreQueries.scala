@@ -23,9 +23,6 @@ import graft.core.Tables
   * matches the oracle bit-for-bit.
   */
 object CoreQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** Exact money arithmetic (order-independent at any scale). */
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
@@ -44,7 +41,7 @@ object CoreQueries {
   // benchmark Q3-style sum+count+avg, queries.sql:3).
   // ---------------------------------------------------------------
   def q01(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .filter(to_date(col("l_shipdate")) <= lit("1998-09-02"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -72,7 +69,7 @@ object CoreQueries {
   // q02 filtered count (benchmark Q2 `count() WHERE`, queries.sql:2).
   // ---------------------------------------------------------------
   def q02(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .filter(col("l_returnflag") === "R" && col("l_quantity") > 25)
       .agg(count(lit(1)).as("cnt"))
 
@@ -83,7 +80,7 @@ object CoreQueries {
   // q03 single-key GROUP BY + ORDER BY count DESC (benchmark Q8 shape).
   // ---------------------------------------------------------------
   def q03(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), decOut(sum(dec2(col("value")))).as("sum_value"))
       .orderBy(col("cnt").desc, col("event_type"))
@@ -99,8 +96,8 @@ object CoreQueries {
   // ExpressionAnalyzer.cpp:423-479).
   // ---------------------------------------------------------------
   def q04(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer")
+    val o = Tables(s, dir, "orders")
+    val c = Tables(s, dir, "customer")
     o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_orders"), decOut(sum(dec2(col("o_totalprice")))).as("revenue"))
@@ -118,11 +115,11 @@ object CoreQueries {
   // table, broadcast on dims; Catalyst + AQE pick the physical mix.
   // ---------------------------------------------------------------
   def q05(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer")
-    val su = t(s, dir, "supplier")
-    val n = t(s, dir, "nation")
+    val li = Tables(s, dir, "lineitem")
+    val o = Tables(s, dir, "orders")
+    val c = Tables(s, dir, "customer")
+    val su = Tables(s, dir, "supplier")
+    val n = Tables(s, dir, "nation")
     li.join(o, li("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(su, li("l_suppkey") === su("s_suppkey") && c("c_nationkey") === su("s_nationkey"))
@@ -155,8 +152,8 @@ object CoreQueries {
   // customer × orders distribution.
   // ---------------------------------------------------------------
   def q06(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders")
+    val c = Tables(s, dir, "customer")
+    val o = Tables(s, dir, "orders")
     c.join(o, c("c_custkey") === o("o_custkey"), "left")
       .groupBy(col("c_custkey"))
       .agg(count(col("o_orderkey")).as("c_count"))
@@ -177,8 +174,8 @@ object CoreQueries {
   // (Interpreters/Set.cpp; SURVEY.md §2.7).
   // ---------------------------------------------------------------
   def q07(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders").select(col("o_custkey"))
+    val c = Tables(s, dir, "customer")
+    val o = Tables(s, dir, "orders").select(col("o_custkey"))
     c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
       .agg(count(lit(1)).as("n_customers_without_orders"))
   }
@@ -191,8 +188,8 @@ object CoreQueries {
   // q08 semi join ≡ reference `IN (subquery)` (SURVEY.md §2.7).
   // ---------------------------------------------------------------
   def q08(s: SparkSession, dir: String): DataFrame = {
-    val p = t(s, dir, "part")
-    val li = t(s, dir, "lineitem").filter(col("l_quantity") >= 48).select(col("l_partkey"))
+    val p = Tables(s, dir, "part")
+    val li = Tables(s, dir, "lineitem").filter(col("l_quantity") >= 48).select(col("l_partkey"))
     p.join(li, p("p_partkey") === li("l_partkey"), "left_semi")
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_parts"))
@@ -208,7 +205,7 @@ object CoreQueries {
   // q09 CROSS JOIN (reference block-nested-loop, Join.h:168,419).
   // ---------------------------------------------------------------
   def q09(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "region").crossJoin(t(s, dir, "nation"))
+    Tables(s, dir, "region").crossJoin(Tables(s, dir, "nation"))
       .select(col("r_name"), col("n_name"))
       .orderBy(col("r_name"), col("n_name"))
 
@@ -231,7 +228,7 @@ object CoreQueries {
   // shuffled RHS, exactly what ANY is for.
   // ---------------------------------------------------------------
   def q10(s: SparkSession, dir: String): DataFrame = {
-    val su = t(s, dir, "supplier")
+    val su = Tables(s, dir, "supplier")
     // ONE lexicographic struct-min instead of min_by(payload-struct,
     // ordering-struct): the ordering (l_orderkey, l_linenumber,
     // l_quantity) is a TOTAL order containing both payload columns, so
@@ -239,7 +236,7 @@ object CoreQueries {
     // projects out of it — half the per-row struct allocations in the
     // partial aggregate, which dominates this query's fact-side scan
     // (guide §4: per-row work in the hot loop).
-    val anyLine = t(s, dir, "lineitem")
+    val anyLine = Tables(s, dir, "lineitem")
       .groupBy(col("l_suppkey"))
       .agg(min(struct(col("l_orderkey"), col("l_linenumber"), col("l_quantity")))
         .as("__first"))
@@ -265,7 +262,7 @@ object CoreQueries {
   // q11 DISTINCT (DataStreams/DistinctBlockInputStream.cpp).
   // ---------------------------------------------------------------
   def q11(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_linestatus"))
       .distinct()
       .orderBy(col("l_returnflag"), col("l_linestatus"))
@@ -278,9 +275,9 @@ object CoreQueries {
   // q12 UNION ALL chain (InterpreterSelectQuery.cpp:364-410).
   // ---------------------------------------------------------------
   def q12(s: SparkSession, dir: String): DataFrame = {
-    val a = t(s, dir, "orders").groupBy(col("o_orderstatus").as("k"))
+    val a = Tables(s, dir, "orders").groupBy(col("o_orderstatus").as("k"))
       .agg(count(lit(1)).as("cnt")).withColumn("src", lit("orders"))
-    val b = t(s, dir, "lineitem").groupBy(col("l_returnflag").as("k"))
+    val b = Tables(s, dir, "lineitem").groupBy(col("l_returnflag").as("k"))
       .agg(count(lit(1)).as("cnt")).withColumn("src", lit("lineitem"))
     a.unionByName(b).select(col("src"), col("k"), col("cnt"))
       .orderBy(col("src"), col("k"))
@@ -299,7 +296,7 @@ object CoreQueries {
   // ---------------------------------------------------------------
   def q13(s: SparkSession, dir: String): DataFrame =
     graft.operators.LimitBy(
-      t(s, dir, "orders"),
+      Tables(s, dir, "orders"),
       n = 3,
       partitionCols = Seq(col("o_orderpriority")),
       orderCols = Seq(col("o_totalprice").desc, col("o_orderkey")))
@@ -318,7 +315,7 @@ object CoreQueries {
   // plans TakeOrderedAndProject — no global sort materialized).
   // ---------------------------------------------------------------
   def q14(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
       .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
       .limit(100)
@@ -331,7 +328,7 @@ object CoreQueries {
   // q15 HAVING (InterpreterSelectQuery.cpp:1004-1010).
   // ---------------------------------------------------------------
   def q15(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"))
       .filter(col("n_orders") >= 20)
@@ -347,7 +344,7 @@ object CoreQueries {
   // total row via rollup(); the reference's only super-aggregate.
   // ---------------------------------------------------------------
   def q16(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .rollup(col("o_orderstatus"))
       .agg(count(lit(1)).as("cnt"), decOut(sum(dec2(col("o_totalprice")))).as("total"))
       .orderBy(col("o_orderstatus").asc_nulls_first)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftFunctions, QueryDef}
+import graft.QueryDef
 import graft.core.Tables
 
 /** Queries exercising the custom Catalyst surface (native
@@ -12,18 +12,13 @@ import graft.core.Tables
   * SURVEY.md §7.3's "needs custom code" rows.
   */
 object ExtensionQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftFunctions.register(s)
-    Tables(s, dir, name)
-  }
-
   // ---------------------------------------------------------------
   // q55 sipHash64 — ClickHouse's canonical string hash as a native
   // codegen'd expression; exact values are pinned by spec-vector unit
   // tests (no DuckDB parity → rows-only driver check).
   // ---------------------------------------------------------------
   def q55(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .selectExpr("p_partkey", "siphash64(p_name) AS h",
         "pmod(siphash64(p_name), 16) AS shard")
       .orderBy(col("p_partkey"))
@@ -34,7 +29,7 @@ object ExtensionQueries {
   // CASE over exact distinct.
   // ---------------------------------------------------------------
   def q56(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(expr("uniq_upto(user_id, 50)").as("u50"),
         expr("uniq_upto(pmod(user_id, 7), 50)").as("u_small"))
@@ -55,7 +50,7 @@ object ExtensionQueries {
   // 'common' rows are >50% by construction (l_quantity spans 1..50).
   // ---------------------------------------------------------------
   def q57(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .withColumn("cls", when(col("l_quantity") <= 35, "common").otherwise(concat(lit("rare_"), col("l_linestatus"))))
       .groupBy(col("l_returnflag"))
       .agg(expr("any_heavy(cls)").as("heavy"), count(lit(1)).as("cnt"))
@@ -74,7 +69,7 @@ object ExtensionQueries {
   // agree with direct aggregation exactly.
   // ---------------------------------------------------------------
   def q79(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "events")
+    val daily = Tables(s, dir, "events")
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(expr("uniq_upto_state(user_id, 50)").as("state"))
     daily.groupBy(col("event_type"))
@@ -97,7 +92,7 @@ object ExtensionQueries {
   // sketch is value-verified, not rows-only.
   // ---------------------------------------------------------------
   def q80(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .withColumn("ms", (col("value") * 1000).cast("long"))
       .groupBy(col("event_type"))
       .agg(
@@ -163,7 +158,7 @@ object ExtensionQueries {
   // dependent → rows-only here; 1%-rank-error bound property-tested.
   // ---------------------------------------------------------------
   def q81(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         expr("quantile_tdigest(l_extendedprice, CAST(0.5 AS DOUBLE))").as("p50_price"),
@@ -180,7 +175,7 @@ object ExtensionQueries {
   // DuckDB with window functions, so the oracle checks values.
   // ---------------------------------------------------------------
   def q91(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .withColumn("w", col("l_linenumber").cast("long"))
       .withColumn("cs", (col("l_quantity") * 100).cast("long"))
       .groupBy(col("l_returnflag"))
@@ -260,7 +255,7 @@ object ExtensionQueries {
   // continuous quantile — DuckDB quantile_cont oracle.
   // ---------------------------------------------------------------
   def q92(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .filter(col("user_id") < 200)
       .groupBy(col("user_id"), col("event_type"))
       .agg(

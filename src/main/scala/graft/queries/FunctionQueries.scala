@@ -16,15 +16,12 @@ import graft.queries.CoreQueries.{dec2, decOut}
   * (quantile*, uniq*, argMin/argMax — SURVEY.md §2.4).
   */
 object FunctionQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---------------------------------------------------------------
   // q17 conditional family: if / multiIf / CASE
   // (Functions/FunctionsConditional.h).
   // ---------------------------------------------------------------
   def q17(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .withColumn("qty_bucket",
         when(col("l_quantity") < 10, "low")
           .when(col("l_quantity") < 30, "mid")
@@ -45,7 +42,7 @@ object FunctionQueries {
   // (Functions/FunctionsTransform.cpp) via graft.functions.
   // ---------------------------------------------------------------
   def q18(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .withColumn("status_name",
         graft.functions.ch.transform(col("o_orderstatus"),
           Seq("O", "F", "P"), Seq("open", "finished", "pending"), "other"))
@@ -64,7 +61,7 @@ object FunctionQueries {
   // (Functions/FunctionsDateTime.h).
   // ---------------------------------------------------------------
   def q19(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .groupBy(
         year(col("o_orderdate")).as("yr"),
         month(col("o_orderdate")).as("mo"))
@@ -82,7 +79,7 @@ object FunctionQueries {
   // over the events stream table.
   // ---------------------------------------------------------------
   def q20(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .filter(col("event_type") === "click")
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("n"))
@@ -97,7 +94,7 @@ object FunctionQueries {
   // (Functions/FunctionsString.h).
   // ---------------------------------------------------------------
   def q21(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .select(
         col("p_partkey"),
         lower(col("p_name")).as("lname"),
@@ -119,7 +116,7 @@ object FunctionQueries {
   // (Functions/FunctionsStringSearch.cpp).
   // ---------------------------------------------------------------
   def q22(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .agg(
         sum(when(col("p_type").like("%BRASS%"), 1L).otherwise(0L)).as("n_like"),
         sum(when(col("p_type").rlike("STEEL|COPPER"), 1L).otherwise(0L)).as("n_regex"),
@@ -137,7 +134,7 @@ object FunctionQueries {
   // (Functions/FunctionsStringSearch.cpp replace* family).
   // ---------------------------------------------------------------
   def q23(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "nation")
+    Tables(s, dir, "nation")
       .select(
         col("n_nationkey").cast("int").as("n_nationkey"),
         regexp_replace(col("n_name"), "[AEIOU]", "_").as("devoweled"),
@@ -155,7 +152,7 @@ object FunctionQueries {
   // ScalaTest instead (libm differences across engines).
   // ---------------------------------------------------------------
   def q24(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .select(
         col("p_partkey"),
         floor(col("p_retailprice")).cast("long").as("price_floor"),
@@ -177,7 +174,7 @@ object FunctionQueries {
   // (Functions/FunctionsVisitParam.cpp) over events.props.
   // ---------------------------------------------------------------
   def q25(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       // from_json with an explicit schema: one Jackson parse per row
       // vs get_json_object's per-path scan — ~10× on wide scans.
       .withColumn("k",
@@ -199,7 +196,7 @@ object FunctionQueries {
   // ---------------------------------------------------------------
   def q26(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("user_id"), col("event_id"),
         (col("value") - lag(col("value"), 1).over(w)).as("delta"))
       .orderBy(col("user_id"), col("event_id"))
@@ -217,7 +214,7 @@ object FunctionQueries {
   def q27(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("user_id"), col("event_id"),
         decOut(sum(dec2(col("value"))).over(w)).as("running_value"))
       .orderBy(col("user_id"), col("event_id"))
@@ -235,7 +232,7 @@ object FunctionQueries {
   // quantileExact) via percentile(); approx variants are rows-only.
   // ---------------------------------------------------------------
   def q28(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         percentile(col("l_quantity"), lit(0.5)).as("p50"),
@@ -255,7 +252,7 @@ object FunctionQueries {
   // q29 uniqExact ≡ count(DISTINCT) (AggregateFunctionUniq.h).
   // ---------------------------------------------------------------
   def q29(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(
         countDistinct(col("user_id")).as("uniq_users"),
@@ -275,7 +272,7 @@ object FunctionQueries {
   // UniqSketchSpec.
   // ---------------------------------------------------------------
   def q30(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(org.apache.spark.sql.graftbridge.Bridge.column(
         graft.functions.UniqSketch(
@@ -288,7 +285,7 @@ object FunctionQueries {
   // max_by/min_by with a struct tiebreak for determinism.
   // ---------------------------------------------------------------
   def q31(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(
         // user_id joins the ordering so the tiebreak is TOTAL w.r.t.
@@ -319,7 +316,7 @@ object FunctionQueries {
   // sorted collect_list/collect_set (sorted for determinism).
   // ---------------------------------------------------------------
   def q32(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "nation")
+    Tables(s, dir, "nation")
       .groupBy(col("n_regionkey").cast("int").as("n_regionkey"))
       .agg(
         // string render: the driver's pandas harness can't hash a raw
@@ -340,7 +337,7 @@ object FunctionQueries {
   // sumIf/countIf ≡ agg over when().
   // ---------------------------------------------------------------
   def q33(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(
         decOut(sum(when(col("event_type") === "purchase", dec2(col("value"))))).as("purchase_value"),
@@ -363,7 +360,7 @@ object FunctionQueries {
   // ---------------------------------------------------------------
   def q89(s: SparkSession, dir: String): DataFrame = {
     graft.sql.ChSql.registerChFunctions(s)
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .selectExpr(
         "p_partkey",
         "concat_ws('|', splitByChar(' ', p_name)) AS by_char",

@@ -14,9 +14,6 @@ import graft.core.Tables
   * (FunctionsCoding.h — CH-style hex, unhex, bitmaskToList).
   */
 object HashQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---------------------------------------------------------------
   // q86 halfMD5 + hex/unhex over documents. halfMD5 is the big-endian
   // read of the first 8 MD5 bytes, so its %016x rendering equals the
@@ -26,7 +23,7 @@ object HashQueries {
     graft.GraftFunctions.register(s)
     // hash kernels above the sort — see TextQueries q40's
     // range-sampling note
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       .selectExpr(
@@ -52,7 +49,7 @@ object HashQueries {
     graft.GraftFunctions.register(s)
     val chHex = Bridge.column(graft.functions.ChHexExpr(
       Bridge.expression(col("user_id"))))
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("user_id")).distinct()
       .select(col("user_id"),
         expr("bitmask_to_list(user_id)").as("bits"),
@@ -77,7 +74,7 @@ object HashQueries {
   // ---------------------------------------------------------------
   def q88(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .selectExpr("pmod(cityhash64(text), 16) AS shard")
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"))
@@ -93,7 +90,7 @@ object HashQueries {
   // ---------------------------------------------------------------
   def q90(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .selectExpr(
         "pmod(farmhash64(text), 8) AS farm_shard",
         "pmod(metrohash64(text), 8) AS metro_shard",

@@ -21,9 +21,6 @@ import graft.queries.CoreQueries.{dec2, decOut}
   * at 1000-executor scale.
   */
 object MergeTreeQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---------------------------------------------------------------
   // q34 ReplacingMergeTree FINAL — keep the max-version row per sort
   // key (reference: ReplacingSortedBlockInputStream.h:11-15). Key =
@@ -35,7 +32,7 @@ object MergeTreeQueries {
   // sort every event row first. (ts, event_id) is unique per key, so
   // "last" is deterministic.
   def q34(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("user_id"), col("event_type"))
       // value joins the version so the tiebreak is TOTAL w.r.t. the
       // output even if (ts, event_id) ever repeats in regenerated data
@@ -59,7 +56,7 @@ object MergeTreeQueries {
   // SummingSortedBlockInputStream.h:17-21).
   // ---------------------------------------------------------------
   def q35(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(decOut(sum(dec2(col("value")))).as("sum_value"), count(lit(1)).as("n_rows"))
       .filter(col("sum_value") =!= 0)
@@ -78,7 +75,7 @@ object MergeTreeQueries {
   // derived here: 'error' events cancel, everything else asserts.
   // ---------------------------------------------------------------
   def q36(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .withColumn("sign", when(col("event_type") === "error", -1).otherwise(1))
       .groupBy(col("user_id"))
       .agg(sum(col("sign")).cast("long").as("net_sign"),
@@ -105,7 +102,7 @@ object MergeTreeQueries {
   // arithmetic — pmod here bounds the product first.)
   // ---------------------------------------------------------------
   def q37(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .filter(pmod(pmod(col("l_orderkey"), lit(4294967296L)) * 40503L, lit(65536L)) <
         lit(6554L))
       .agg(count(lit(1)).as("sample_rows"),
@@ -123,10 +120,10 @@ object MergeTreeQueries {
   // VirtualColumnFactory.cpp:30-33).
   // ---------------------------------------------------------------
   def q38(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
+    val c = Tables(s, dir, "customer")
       .select(lit("customer").as("_table"), col("c_custkey").as("key"),
         col("c_name").as("name"), col("c_nationkey").as("nationkey"))
-    val su = t(s, dir, "supplier")
+    val su = Tables(s, dir, "supplier")
       .select(lit("supplier").as("_table"), col("s_suppkey").as("key"),
         col("s_name").as("name"), col("s_nationkey").as("nationkey"))
     c.unionByName(su)
@@ -148,7 +145,7 @@ object MergeTreeQueries {
   // is the partitionBy key enabling partition pruning.
   // ---------------------------------------------------------------
   def q39(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .groupBy(graft.functions.ch.toYYYYMM(col("o_orderdate")).as("yyyymm"))
       .agg(count(lit(1)).as("cnt"), decOut(sum(dec2(col("o_totalprice")))).as("total"))
       .orderBy(col("yyyymm"))
@@ -175,7 +172,7 @@ object MergeTreeQueries {
   // ---------------------------------------------------------------
   def q97(s: SparkSession, dir: String): DataFrame = {
     import graft.storage.GraphiteRollup
-    val series = t(s, dir, "events").select(
+    val series = Tables(s, dir, "events").select(
       col("event_type").as("Path"),
       col("ts").cast("long").as("Time"),
       col("value").as("Value"),
@@ -190,8 +187,7 @@ object MergeTreeQueries {
     // both conversions and the epoch-seconds cast are monotone, so
     // they commute with max. The head() on the rewritten
     // LocalRelation is driver-only — no Spark job.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawEvents = s.read.parquet(s"$dir/events.parquet")
+    val rawEvents = Tables.read(s, s"$dir/events.parquet")
     val rawMax = rawEvents.agg(max(col("ts")).as("m"))
     val maxDf = graft.operators.MetadataAggregate.maybeRewrite(s, rawMax)
       .getOrElse(rawMax)

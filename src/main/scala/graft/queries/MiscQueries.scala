@@ -12,9 +12,6 @@ import graft.functions.ch
   * Conversion families, §2.2 PREWHERE, FunctionsExternalDictionaries).
   */
 object MiscQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---------------------------------------------------------------
   // q66 URL family (FunctionsURL.h: protocol/domain/path/queryString/
   // extractURLParameter/topLevelDomain/cutWWW…) — URLs synthesized
@@ -22,7 +19,7 @@ object MiscQueries {
   // helpers; the oracle recomputes components from the same parts.
   // ---------------------------------------------------------------
   def q66(s: SparkSession, dir: String): DataFrame = {
-    val urls = t(s, dir, "documents")
+    val urls = Tables(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
         concat(lit("https://www."), col("source"), lit(".example.com/"),
           col("lang"), lit("/p"), pmod(col("doc_id"), lit(100)),
@@ -73,7 +70,7 @@ object MiscQueries {
         graft.functions.PlanBarrier(
           org.apache.spark.sql.graftbridge.Bridge.expression(c)))
     val ip = pmod(col("user_id") * 2654435761L, lit(4294967296L))
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_id"), ip.as("ipnum"))
       .select(col("event_id"), col("ipnum"),
         pb(concat_ws(".",
@@ -103,7 +100,7 @@ object MiscQueries {
   // mod 256, toString/toDate/toFixedString(rpad), parse-from-string.
   // ---------------------------------------------------------------
   def q68(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .select(col("o_orderkey"),
         pmod(col("o_orderkey"), lit(256)).cast("int").as("to_uint8"),
         col("o_totalprice").cast("long").as("to_int64"),
@@ -131,10 +128,10 @@ object MiscQueries {
   // map rides the closure — no join, no shuffle.
   // ---------------------------------------------------------------
   def q69(s: SparkSession, dir: String): DataFrame = {
-    val dict: Map[Long, String] = t(s, dir, "nation")
+    val dict: Map[Long, String] = Tables(s, dir, "nation")
       .select(col("n_nationkey").cast("long"), col("n_name"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    t(s, dir, "customer")
+    Tables(s, dir, "customer")
       .select(col("c_custkey"),
         element_at(typedLit(dict), col("c_nationkey").cast("long")).as("nation_name"))
       .groupBy(col("nation_name"))
@@ -155,7 +152,7 @@ object MiscQueries {
   // materialization of untouched columns.
   // ---------------------------------------------------------------
   def q70(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .filter(col("l_quantity") === 50)
       .select(col("l_orderkey"), col("l_quantity"))
       .agg(count(lit(1)).as("cnt"), sum(col("l_orderkey")).as("key_sum"))
@@ -174,7 +171,7 @@ object MiscQueries {
   // ---------------------------------------------------------------
   def q93(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    t(s, dir, "customer")
+    Tables(s, dir, "customer")
       .select(col("c_nationkey").cast("long").as("k")).distinct()
       .withColumn("city_id", col("k") + 1000L)
       .selectExpr(
@@ -213,7 +210,7 @@ object MiscQueries {
       (1, "1996-01-01", "1996-03-31"), (2, "1996-04-01", "1996-06-30"),
       (3, "1996-07-01", "1996-09-30"), (4, "1996-10-01", "1996-12-31"))
     val qdf = s.createDataFrame(quarters).toDF("q", "lo", "hi")
-    val nations = t(s, dir, "nation").select(col("n_nationkey").cast("long").as("id"))
+    val nations = Tables(s, dir, "nation").select(col("n_nationkey").cast("long").as("id"))
     val src = nations.crossJoin(qdf)
       .select(col("id"), to_date(col("lo")).as("lower"),
         to_date(col("hi")).as("upper"),
@@ -223,7 +220,7 @@ object MiscQueries {
         lit(null).cast("date").as("upper"),
         (col("id") * 10 + lit(9)).as("value")))
     val dict = RangeHashedDict.build(src, "id", "lower", "upper", "value")
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .select(pmod(col("o_custkey"), lit(25)).cast("long").as("k"),
         to_date(col("o_orderdate")).as("od"))
       .select(col("k"),
@@ -251,7 +248,7 @@ object MiscQueries {
   // DuckDB oracle checks.
   // ---------------------------------------------------------------
   def q125(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders_meta")
+    Tables(s, dir, "orders").createOrReplaceTempView("orders_meta")
     val df = graft.sql.ChDdl.execute(s,
       "SELECT count() AS n, min(o_orderkey) AS kmin, max(o_orderkey) AS kmax, " +
         "min(o_custkey) AS cmin, max(o_custkey) AS cmax FROM orders_meta").get
@@ -274,7 +271,7 @@ object MiscQueries {
   // ---------------------------------------------------------------
   def q126(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.ComplexKeyHashedDict
-    val part = t(s, dir, "part")
+    val part = Tables(s, dir, "part")
     val dictSrc = part.groupBy(col("p_brand"), col("p_size"))
       .agg(min(col("p_partkey")).cast("long").as("v"))
     val dict = ComplexKeyHashedDict.build(

@@ -132,7 +132,7 @@ object MultimodalQueries {
       "graft_media_features_" + Integer.toHexString(dir.hashCode)).getPath
     Media.materializeFeatures(s, media(s, dir), path, dim = 64)
     val buckets = Media.bandBuckets(
-      s.read.parquet(path).select(col("media_id"), col("ph")))
+      Tables.read(s, path).select(col("media_id"), col("ph")))
     val pairs = Media.pairsFromBuckets(buckets, maxHamming = 6)
     val hits = pairs
       .select(explode(array(col("id_a"), col("id_b"))).as("media_id"))

@@ -14,9 +14,6 @@ import graft.operators.{AsOfJoin, SaltedJoin}
   * and hot-key-safe joins.
   */
 object OperatorQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---------------------------------------------------------------
   // q84 as-of join — every click event picks up the most recent
   // (ts' <= ts) purchase value of the same user. Single shuffle on
@@ -25,7 +22,7 @@ object OperatorQueries {
   // engines.
   // ---------------------------------------------------------------
   def q84(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id"), col("ts"))
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -56,9 +53,9 @@ object OperatorQueries {
   // supplier side replicates 8×). Results must equal the plain join.
   // ---------------------------------------------------------------
   def q85(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(col("l_suppkey"), col("l_quantity"))
-    val su = t(s, dir, "supplier")
+    val su = Tables(s, dir, "supplier")
       .select(col("s_suppkey").as("l_suppkey"), col("s_nationkey"))
     SaltedJoin(li, su, keys = Seq("l_suppkey"), buckets = 8)
       .groupBy(col("s_nationkey"))
@@ -86,7 +83,7 @@ object OperatorQueries {
   // volume never reaches the join.
   // ---------------------------------------------------------------
   def q113(s: SparkSession, dir: String): DataFrame = {
-    val activity = t(s, dir, "events")
+    val activity = Tables(s, dir, "events")
       .select(col("user_id"),
         to_date(date_trunc("week", col("ts"))).as("wk"))
       .distinct()
@@ -138,7 +135,7 @@ object OperatorQueries {
   // after the first aggregation.
   // ---------------------------------------------------------------
   def q116(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("event_type"), col("ts"))
     val t1 = ev.filter(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
@@ -184,7 +181,7 @@ object OperatorQueries {
   // ---------------------------------------------------------------
   def q98(s: SparkSession, dir: String): DataFrame =
     graft.streaming.Sessionize.sessionsBatch(
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), col("ts"),
           col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("v")),
       "user_id", "ts", "v", gapSeconds = 600)
@@ -226,7 +223,7 @@ object OperatorQueries {
   // ---------------------------------------------------------------
   def q99(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     val a = d.select((col("doc_id") + 1).as("pair"), col("text").as("text_a"))
     val b = d.select(col("doc_id").as("pair"), col("text").as("text_b"))
     val edges = a.join(b, "pair")
@@ -234,7 +231,7 @@ object OperatorQueries {
       .select((col("pair") - 1).as("d1"), col("pair").as("d2"))
     val comp = graft.operators.ConnectedComponents(edges, "d1", "d2")
       .withColumnRenamed("node", "doc_id")
-    t(s, dir, "documents").select(col("doc_id"))
+    Tables(s, dir, "documents").select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("cluster"))

@@ -14,9 +14,6 @@ import graft.core.Tables
   * is assembled with exactly these shapes.
   */
 object PipelineQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---------------------------------------------------------------
   // q101 sequence packing — concatenate-and-chop (the GPT-pretraining
   // shape): documents are laid out contiguously per shard in a
@@ -34,7 +31,7 @@ object PipelineQueries {
   def q101(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"),
         expr("size(split(text, ' '))").cast("long").as("n_tokens"))
       .withColumn("shard", pmod(col("doc_id"), lit(8)))
@@ -73,7 +70,7 @@ object PipelineQueries {
     // DuckDB has no base-conversion function
     val h = md5(col("doc_id").cast("string").cast("binary"))
     val bucket = conv(substring(h, 31, 2), 16, 10).cast("long")
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), bucket.as("bucket"))
       .withColumn("split",
         when(col("bucket") < 204, "train")
@@ -109,7 +106,7 @@ object PipelineQueries {
   def q103(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
     // repetition kernel above the sort — see q119's range-sampling note
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       .select(col("doc_id"), expr("repetition_stats(text)").as("r"))
@@ -184,7 +181,7 @@ object PipelineQueries {
     // the BASE scan below the barriered projection (a nondeterministic
     // projection blocks pushdown, so the split must already sit under
     // it); the Bloom/size filters above reference the gs ATTRIBUTE.
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     def gramsOf(d: DataFrame) = d.select(col("doc_id"),
       org.apache.spark.sql.graftbridge.Bridge.column(
         graft.functions.PlanBarrier(org.apache.spark.sql.graftbridge.Bridge
@@ -260,7 +257,7 @@ object PipelineQueries {
   def q105(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
     val w = Window.partitionBy(col("digest"))
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"),
         md5(expr("normalize_for_dedup(text)").cast("binary")).as("digest"))
       .withColumn("canonical_doc_id", min(col("doc_id")).over(w))
@@ -288,7 +285,7 @@ object PipelineQueries {
   // all except the presentation sort.
   // ---------------------------------------------------------------
   def q106(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     // demo rates ladder: src<k> keeps (1 + k%4) * 25% — production
     // supplies a real (source, rate) table in its place
     val rates = docs.select(col("source")).distinct()
@@ -335,7 +332,7 @@ object PipelineQueries {
   // ---------------------------------------------------------------
   def q108(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val sample = docs.orderBy(col("doc_id")).limit(64)
       .select(col("text")).collect().map(_.getString(0))
     val wordFreq = sample.toSeq
@@ -366,7 +363,7 @@ object PipelineQueries {
   // no shuffle except the presentation sort.
   // ---------------------------------------------------------------
   def q109(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     // demo ladder: src<k> replicates at (1 + k%4) * 0.75 epochs
     val rates = docs.select(col("source")).distinct()
       .withColumn("rate_bp",
@@ -428,7 +425,7 @@ object PipelineQueries {
     // Lazy: the Bloom aggregation (the first action) materializes it;
     // per-invocation state, dropped with the DataFrame (same pattern
     // as q99's edge checkpoint).
-    val digested = t(s, dir, "documents")
+    val digested = Tables(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         md5(expr("normalize_for_dedup(text)").cast("binary")).as("digest"))
       .localCheckpoint(eager = false)
@@ -489,7 +486,7 @@ object PipelineQueries {
   def q118(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("source"))
       .orderBy(col("cnt").desc, col("tok"))
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("source"), explode(
         expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')")).as("tok"))
       .groupBy(col("source"), col("tok"))
@@ -549,7 +546,7 @@ object PipelineQueries {
     // the 8-regex projection above the Sort it runs exactly once;
     // rows and order are unchanged (guide §1.2: fix the algorithm —
     // don't compute things you throw away).
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       .select(col("doc_id"),
@@ -585,7 +582,7 @@ object PipelineQueries {
   // (the subset lattice), not 4 scans.
   // ---------------------------------------------------------------
   def q121(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .cube(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .select(coalesce(col("source"), lit("ALL")).as("source"),
@@ -614,7 +611,7 @@ object PipelineQueries {
   def q122(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("source"))
       .orderBy(col("priority"), col("doc_id"))
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         md5(col("doc_id").cast("string").cast("binary")).as("priority"))
       .withColumn("rk", row_number().over(w))

@@ -20,9 +20,6 @@ import graft.core.Tables
   * rows, never a global sort).
   */
 object SimilarityQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** ONE driver job fetching vec_id 0..16 in order: row 0 is the
     * query vector, rows 1..16 the deterministic codebook sample.
     * q100/q107 previously ran TWO collect jobs (the codebook sample
@@ -69,7 +66,7 @@ object SimilarityQueries {
   // exact ANN baseline: one broadcast, one narrow map, TakeOrdered k.
   // ---------------------------------------------------------------
   def q50(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
@@ -94,7 +91,7 @@ object SimilarityQueries {
   // aggregation exact and order-independent at any scale.
   // ---------------------------------------------------------------
   def q51(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
+    Tables(s, dir, "embeddings")
       .select(col("label"),
         sqrt(expr("vec_norm2(embedding)")).cast(DecimalType(18, 6)).as("nrm"))
       .groupBy(col("label"))
@@ -113,7 +110,7 @@ object SimilarityQueries {
   // the bucketed ANN path (q53): ~N/256 candidates per probe.
   // ---------------------------------------------------------------
   def q52(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
+    Tables(s, dir, "embeddings")
       .select(expr(bucketE).as("bucket"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_vecs"))
@@ -130,7 +127,7 @@ object SimilarityQueries {
   // to 1/256 of the data before any vector math runs.
   // ---------------------------------------------------------------
   def q53(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings").withColumn("bucket", expr(bucketE))
+    val e = Tables(s, dir, "embeddings").withColumn("bucket", expr(bucketE))
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"), col("bucket").as("qb"))
     e.filter(col("vec_id") =!= 0)
@@ -159,7 +156,7 @@ object SimilarityQueries {
   // data the pair source is the LSH bucket join, not consecutive ids).
   // ---------------------------------------------------------------
   def q54(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
     val a = e.select(col("vec_id").as("v1"), col("embedding").as("embedding"))
     val b = e.select(col("vec_id").as("v2"), col("embedding").as("qe"))
     a.join(b, col("v2") === col("v1") + 1)
@@ -194,7 +191,7 @@ object SimilarityQueries {
   // with `bucket` as a partition key it prunes to the 9 partitions.
   // ---------------------------------------------------------------
   def q95(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings").withColumn("bucket", expr(bucketE))
+    val e = Tables(s, dir, "embeddings").withColumn("bucket", expr(bucketE))
     val probes = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"), col("bucket").as("qb"))
       .select(col("qe"), explode(expr(
@@ -254,7 +251,7 @@ object SimilarityQueries {
 
   def q96(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
       .withColumn("proj", expr(projE))
       .withColumn("bucket", expr(bucketFromProjE))
     // probe-set construction is QUERY PLANNING, not a scan: fetch the
@@ -320,7 +317,7 @@ object SimilarityQueries {
   // sums keep the result exact and order-independent.
   // ---------------------------------------------------------------
   def q82(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
+    Tables(s, dir, "embeddings")
       // slice BEFORE posexplode: exploding all 64 dims then filtering
       // pos < 8 generates 8× the rows for nothing
       .select(col("label"), posexplode(slice(col("embedding"), 1, 8)).as(Seq("pos0", "x")))
@@ -354,7 +351,7 @@ object SimilarityQueries {
   // ---------------------------------------------------------------
   def q100(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
     // same sample rows as IvfAnn.sampled(vec_id 1..16) + the query
     // row, fetched in ONE job instead of two
     val (qe, sample) = headVectors(e)
@@ -409,7 +406,7 @@ object SimilarityQueries {
   // ---------------------------------------------------------------
   def q107(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
     // same sample rows as PqAnn.sampled(vec_id 1..16) + the query
     // row, fetched in ONE job instead of two
     val (qe, sample) = headVectors(e)
@@ -465,8 +462,8 @@ object SimilarityQueries {
   // ---------------------------------------------------------------
   def q110(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    val e = t(s, dir, "embeddings")
-    val docs = t(s, dir, "documents")
+    val e = Tables(s, dir, "embeddings")
+    val docs = Tables(s, dir, "documents")
     val model = graft.operators.IvfAnn.sampled(
       e.filter(col("vec_id").between(1, 16)), "vec_id", "embedding", 16)
     val cells = e

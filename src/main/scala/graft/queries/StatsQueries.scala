@@ -14,19 +14,16 @@ import graft.functions.ch
   * §2.7, §2.9).
   */
 object StatsQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---------------------------------------------------------------
   // q74 FULL OUTER JOIN — both-side non-joined rows survive with
   // NULLs (reference streams unmatched RHS rows in a second pass,
   // Join.h:254). Orders in a month window vs high-value customers.
   // ---------------------------------------------------------------
   def q74(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
       .filter(year(col("o_orderdate")) === 1997 && month(col("o_orderdate")) === 1)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_jan97"))
-    val c = t(s, dir, "customer").filter(col("c_custkey") % 100 === 0)
+    val c = Tables(s, dir, "customer").filter(col("c_custkey") % 100 === 0)
       .select(col("c_custkey"), col("c_mktsegment"))
     o.join(c, o("o_custkey") === c("c_custkey"), "full")
       .select(
@@ -51,7 +48,7 @@ object StatsQueries {
   // to 6 decimals for cross-engine float agreement.
   // ---------------------------------------------------------------
   def q75(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         round(var_samp(col("l_quantity")), 6).as("var_samp_qty"),
@@ -86,7 +83,7 @@ object StatsQueries {
     // (12 scheduling-floor jobs → the set ops plan against leaves).
     // The INTERSECT/EXCEPT operators themselves are unchanged — they
     // are this query's coverage point.
-    def custs(y: Int) = t(s, dir, "orders")
+    def custs(y: Int) = Tables(s, dir, "orders")
       .filter(col("o_orderdate") >= lit(s"$y-01-01") &&
         col("o_orderdate") < lit(s"${y + 1}-01-01"))
       .select(col("o_custkey")).distinct()
@@ -118,7 +115,7 @@ object StatsQueries {
   // arrayEnumerateUniq), realized without any shuffle.
   // ---------------------------------------------------------------
   def q77(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), expr("split(text, ' ')").as("ws"))
       .select(col("doc_id"),
         expr("aggregate(ws, 0L, (a, w) -> a + length(w))").as("sum_array_lens"),
@@ -144,7 +141,7 @@ object StatsQueries {
   // synthetic coordinates and formatReadableSize over byte counts.
   // ---------------------------------------------------------------
   def q78(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
+    val d = Tables(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"),
         (pmod(col("doc_id") * 7, lit(360)) - 180).cast("double").as("lon"),
         (pmod(col("doc_id") * 13, lit(180)) - 90).cast("double").as("lat"))
@@ -176,7 +173,7 @@ object StatsQueries {
   // DECIMAL(20,0) (the benchmark's sum(UserID) case).
   // ---------------------------------------------------------------
   def q83(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .agg(
         // scale-0 string render keeps the full 64-bit exactness the
         // decimal buffer provides (a double output would lose it >2^53)
@@ -199,7 +196,7 @@ object StatsQueries {
   // ---------------------------------------------------------------
   def q114(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val firstDay = t(s, dir, "events")
+    val firstDay = Tables(s, dir, "events")
       .select(col("user_id"), to_date(col("ts")).as("d"))
       .groupBy(col("user_id")).agg(min(col("d")).as("day"))
     val w = Window.orderBy(col("day"))
@@ -234,7 +231,7 @@ object StatsQueries {
   // approximate spelling (uniqState per day + merge) is q79's path.
   // ---------------------------------------------------------------
   def q115(s: SparkSession, dir: String): DataFrame = {
-    val a = t(s, dir, "events")
+    val a = Tables(s, dir, "events")
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .distinct()
     val dau = a.groupBy(col("day")).agg(count(lit(1)).as("dau"))
@@ -276,7 +273,7 @@ object StatsQueries {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rowsBetween(-7, -1)
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"), to_date(col("ts")).as("day"))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("n"))

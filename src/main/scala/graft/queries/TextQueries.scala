@@ -20,9 +20,6 @@ import graft.core.Tables
   * data-parallel: the same plans hold at 100 TB.
   */
 object TextQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** doc_id + 16-perm MinHash signature (shared by q45/q47), via the
     * native [[graft.functions.MinHashSigExpr]] kernel: the whole
     * signature is ONE codegen'd call per document — a narrow
@@ -33,7 +30,7 @@ object TextQueries {
     */
   private def minhashSig(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), expr("minhash_sig(text, 16, 5)").as("sig"))
   }
 
@@ -49,7 +46,7 @@ object TextQueries {
   // projecting after runs each kernel exactly once; rows and order
   // are unchanged.
   def q40(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       .select(
@@ -72,7 +69,7 @@ object TextQueries {
   // so both engines round identically.
   // ---------------------------------------------------------------
   def q41(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("lang"),
         expr("size(split(text, ' '))").cast("long").as("toks"),
         expr("size(filter(split(text, ' '), w -> w IN ('the', 'a')))").cast("long").as("stops"),
@@ -103,7 +100,7 @@ object TextQueries {
   // digest = md5 as in FunctionsHashing.h).
   // ---------------------------------------------------------------
   def q42(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(md5(col("text").cast("binary")).as("h"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -121,7 +118,7 @@ object TextQueries {
   // against the labeled `lang` column.
   // ---------------------------------------------------------------
   def q43(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("lang"),
         when(expr("size(filter(split(text, ' '), w -> w IN ('the', 'a')))") >=
           expr("size(split(text, ' '))") * 0.08, "stopword_heavy")
@@ -145,7 +142,7 @@ object TextQueries {
   def q44(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
     // kernel above the sort — see q40's range-sampling note
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       .select(col("doc_id"),
@@ -169,7 +166,7 @@ object TextQueries {
   def q45(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
     // kernel above the sort — see q40's range-sampling note
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       // string render: the driver's pandas harness can't hash a raw
@@ -191,7 +188,7 @@ object TextQueries {
     // exploded distinct (doc, shingle) multiset — ~len rows per doc —
     // through two aggregates; this shuffles only the documents.
     graft.GraftFunctions.register(s)
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     val a = d.select((col("doc_id") + 1).as("pair"), col("text").as("text_a"))
     val b = d.select(col("doc_id").as("pair"), col("text").as("text_b"))
     // kernel + filter ABOVE the sort (q40's range-sampling note), with
@@ -224,7 +221,7 @@ object TextQueries {
   // ---------------------------------------------------------------
   def q120(s: SparkSession, dir: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     val a = d.select((col("doc_id") + 1).as("pair"), col("text").as("text_a"))
     val b = d.select(col("doc_id").as("pair"), col("text").as("text_b"))
     // kernel + filter above the sort, PlanBarrier-wrapped — see q46
@@ -319,7 +316,7 @@ object TextQueries {
     // a narrow projection; the previous shape exploded every token
     // through 64 conditional-sum aggregates and a shuffle.
     graft.GraftFunctions.register(s)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), expr("simhash64(text)").as("simhash"))
       .orderBy(col("doc_id"))
   }
@@ -342,7 +339,7 @@ object TextQueries {
     // construction (a band self-JOIN would recompute the simhash
     // scan on each side); buckets over 64 docs are skipped like q47's
     // hot-bucket cap
-    val banded = t(s, dir, "documents")
+    val banded = Tables(s, dir, "documents")
       .select(col("doc_id"), expr("simhash64(text)").as("sh"))
       .select(col("doc_id"), col("sh"),
         explode(expr(
@@ -376,7 +373,7 @@ object TextQueries {
     // (the most wasteful plan in the round-2 tree).
     graft.GraftFunctions.register(s)
     // kernel above the sort — see q40's range-sampling note
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
       .select(col("doc_id"),

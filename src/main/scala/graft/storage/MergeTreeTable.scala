@@ -90,7 +90,7 @@ object MergeTreeTable {
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.core.Tables.read(spark, path)
 
   /** Read exposing the reference's `_part` virtual column
     * (MergeTreeDataSelectExecutor virtual columns; `_table` is the

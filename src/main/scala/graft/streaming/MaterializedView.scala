@@ -58,7 +58,7 @@ object MaterializedView {
     require(source.isStreaming, "source must be a streaming DataFrame")
     def sums = sumCols.map(c => sum(col(c)).as(c))
     def registerView(): Unit =
-      spark.read.parquet(targetPath)
+      graft.core.Tables.read(spark, targetPath)
         .groupBy(keys.map(col): _*)
         .agg(sums.head, sums.tail: _*)
         .createOrReplaceTempView(targetView)
@@ -92,7 +92,7 @@ object MaterializedView {
   def compact(spark: SparkSession, targetPath: String,
       keys: Seq[String], sumCols: Seq[String]): Unit = {
     val sums = sumCols.map(c => sum(col(c)).as(c))
-    val folded = spark.read.parquet(targetPath)
+    val folded = graft.core.Tables.read(spark, targetPath)
       .groupBy(keys.map(col): _*)
       .agg(sums.head, sums.tail: _*)
       .withColumn("__batch_id", lit(-1L))

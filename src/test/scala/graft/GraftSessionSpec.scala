@@ -29,6 +29,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(conf.get("spark.sql.extensions") === "graft.GraftExtensions")
     assert(conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
       === "1000000")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.sparkContext.master === "local[4]")
     assert(conf.get("spark.sql.shuffle.partitions") === "4")
